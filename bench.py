@@ -99,8 +99,7 @@ def main():
     from linkgraph import suite as _suite
     from linkgraph.graph import LinkGraph
 
-    spark = get_spark("linkgraph-bench", cores=cores, shuffle_partitions=P,
-                      driver_memory="48g")
+    spark = get_spark("linkgraph-bench", cores=cores, shuffle_partitions=P)
 
     extra: dict = {"cores": cores, "partitions": P, "reps": {}}
 

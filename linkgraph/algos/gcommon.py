@@ -6,6 +6,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
+def _ckpt(df: DataFrame, P: int, *keys: str) -> DataFrame:
+    """Pin ``df`` on ``keys`` across ``P`` partitions and truncate its lineage
+    (eager local checkpoint) — the per-round state step of the peel and
+    colouring loops."""
+    return df.repartition(P, *keys).localCheckpoint(eager=True)
+
+
 def norm_edges(
     edges: DataFrame,
     partitions: int,

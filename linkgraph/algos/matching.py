@@ -29,13 +29,11 @@ import time
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .gcommon import _ckpt
+
 PRI_A = 1_000_003
 PRI_B = 12345
 PRI_M = (1 << 31) - 1
-
-
-def _ckpt(df: DataFrame, P: int, *keys: str) -> DataFrame:
-    return df.repartition(P, *keys).localCheckpoint(eager=True)
 
 
 def _key():

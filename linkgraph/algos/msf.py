@@ -30,9 +30,7 @@ import time
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def _ckpt(df: DataFrame, P: int, *keys: str) -> DataFrame:
-    return df.repartition(P, *keys).localCheckpoint(eager=True)
+from .gcommon import _ckpt
 
 
 def boruvka_msf(

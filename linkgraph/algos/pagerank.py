@@ -32,13 +32,21 @@ partitions ... pinned shuffle partitioning per superstep"):
     corr = (1-S)/V folds lazily into the next superstep.  The correction
     enters through a broadcast 1-row LocalRelation (not a literal), keeping
     generated code byte-identical across supersteps (codegen cache hits).
-  * **One job per superstep — tol mode included**: the mass sum, the
-    dangling raw mass, and the L1 convergence delta all piggy-back on the
-    eager localCheckpoint via the Observation API (the delta's dependence
-    on the not-yet-observed total mass is broken by predicting S from the
-    previous superstep's observed dangling mass: S = 1 - d*dm exactly);
-    the checkpoint truncates lineage (the reference's "plain arrays"
-    model, by other means).
+  * **One superstep body, one aggregation, one job**: the checkpointed
+    state is ``(id, dang, rank)``.  The block join is outer on the state
+    side, and every joined row emits its src's own state row next to its
+    contributions, so a single ``groupBy(id)`` yields the new rank, the
+    old rank and the dangling flag: the state enters each superstep's plan
+    once, and no V-row join or second scan of it is left in the loop.  The
+    mass sum, the dangling raw mass and the L1 delta ride on that
+    aggregate as Observation columns of the eager localCheckpoint (the
+    delta's dependence on the not-yet-observed total mass is broken by
+    predicting S from the previous superstep's observed dangling mass:
+    S = 1 - d*dm exactly).  Fixed-iteration runs take the same body with
+    ``dang`` constant False.  The checkpoint truncates lineage (the
+    reference's "plain arrays" model, by other means) and inherits the
+    plan's size estimate, which therefore grows additively per superstep
+    (a second state input would double its bit length every superstep).
   * Optional durable checkpoint (parquet + metrics.json) for mid-algorithm
     resume (ckpt.CheckpointManager).
 
@@ -208,8 +216,6 @@ def pagerank(
     checkpoint_dir: str | None = None,
     hub_degree_threshold: int | None = None,
     num_salts: int = 8,
-    lineage_truncate_every: int = 1,
-    block_size: int | None = None,
     dst_buckets: int | None = None,
     initial_ranks: DataFrame | None = None,
 ) -> tuple[DataFrame, list[dict]]:
@@ -233,7 +239,8 @@ def pagerank(
     """
     spark = edges.sparkSession
     P = int(partitions or spark.conf.get("spark.sql.shuffle.partitions"))
-    bs = block_size or hub_degree_threshold or DEFAULT_BLOCK_SIZE
+    bs = hub_degree_threshold or DEFAULT_BLOCK_SIZE
+    conv_mode = num_iters is None
 
     if vertices is None:
         vertices = (
@@ -241,29 +248,21 @@ def pagerank(
             .union(edges.select(F.col("dst").alias("id")))
             .distinct()
         )
-    # convergence mode only: a static dangling flag rides along on the
-    # vertex table — the tol-driven loop observes the raw dangling mass in
-    # the SAME job as the update (see below), which is what lets the next
-    # superstep predict its own total mass without a separate aggregation
-    # job.  Fixed-iteration runs never read the flag, so they skip the
-    # E-row src-distinct + V-row join and keep the plain vertex build.
-    if num_iters is None:
+    # the dangling flag is part of the rank state.  Only convergence mode
+    # reads it (the predicted mass behind the in-job L1 delta, see below);
+    # fixed-iteration runs carry the constant False and skip the E-row
+    # src-distinct + V-row join and the dangling count.
+    if conv_mode:
         srcs = edges.select(F.col("src").alias("id")).distinct()
-        v = (
-            vertices.select("id")
-            .join(
-                srcs.withColumn("_s", F.lit(1)).hint("shuffle_hash"),
-                "id",
-                "left",
-            )
-            .select("id", F.col("_s").isNull().alias("dang"))
-            .repartition(P, "id")
-            .persist()
-        )
+        v = vertices.select("id").join(
+            srcs.withColumn("_s", F.lit(1)).hint("shuffle_hash"), "id", "left"
+        ).select("id", F.col("_s").isNull().alias("dang"))
     else:
-        v = vertices.select("id").repartition(P, "id").persist()
+        v = vertices.select("id", F.lit(False).alias("dang"))
+    v = v.repartition(P, "id").persist()
     V = v.count()
     E = edges.count()
+    n_dang = v.filter(F.col("dang")).count() if conv_mode else 0
 
     if dst_buckets:
         blocks, bucket_map = bucketed_adjacency_blocks(edges, P, dst_buckets, bs)
@@ -275,10 +274,11 @@ def pagerank(
     ckpt = CheckpointManager(checkpoint_dir) if checkpoint_dir else None
     metrics: list[dict] = []
     start_iter = 0
-    corr = 0.0  # lazy per-vertex additive correction (dangling mass)
     if ckpt is not None and (last := ckpt.latest()) is not None:
+        # durable state is (id, rank) with the correction folded in; the
+        # dangling flag comes back from the vertex table
         ranks_raw, _ = ckpt.load(spark, last)
-        ranks_raw = ranks_raw.repartition(P, "id").localCheckpoint(eager=True)
+        state = v.join(ranks_raw, "id")
         metrics = ckpt.history()
         start_iter = last + 1
     elif initial_ranks is not None:
@@ -286,169 +286,120 @@ def pagerank(
         # then L1-normalize so Σrank = 1 exactly
         warm = v.join(
             initial_ranks.select("id", F.col("rank").alias("_r0")), "id", "left"
-        ).select("id", F.coalesce("_r0", F.lit(1.0 / V)).alias("rank"))
+        ).select("id", "dang", F.coalesce("_r0", F.lit(1.0 / V)).alias("rank"))
         total = float(warm.agg(F.sum("rank").alias("s")).collect()[0]["s"]) or 1.0
-        ranks_raw = (
-            warm.select("id", (F.col("rank") / total).alias("rank"))
-            .repartition(P, "id")
-            .localCheckpoint(eager=True)
-        )
+        state = warm.select("id", "dang", (F.col("rank") / total).alias("rank"))
     else:
-        ranks_raw = v.select("id", (F.lit(1.0) / V).alias("rank")).localCheckpoint(
-            eager=True
-        )
-
-    total_iters = num_iters if num_iters is not None else max_iter
-    conv_mode = num_iters is None
-    n_dang = v.filter(F.col("dang")).count() if conv_mode else 0
+        state = v.select("id", "dang", (F.lit(1.0) / V).alias("rank"))
     # sd = Σ raw rank over dangling vertices of the CURRENT state (without
-    # the lazily-folded corr).  Cold start is uniform so it's analytic;
-    # warm/resume states need one setup aggregation.  Per superstep sd is
-    # then re-observed inside the single update job.
-    sd = None
-    if conv_mode:
-        if start_iter == 0 and initial_ranks is None:
-            sd = float(n_dang) / float(V)
-        else:
-            sd = float(
-                ranks_raw.join(v.filter(F.col("dang")), "id", "left_semi")
-                .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("s"))
-                .collect()[0]["s"]
-            )
-    it = start_iter
-    while it < total_iters:
+    # the lazily-folded corr), observed on the setup checkpoint and then
+    # re-observed inside every superstep's single job
+    obs = Observation("dangling_mass")
+    state = (
+        state.repartition(P, "id")
+        .observe(obs, F.sum(F.when(F.col("dang"), F.col("rank")).otherwise(0.0)).alias("sd"))
+        .localCheckpoint(eager=True)
+    )
+    sd = float(obs.get["sd"])
+    v.unpersist()
+
+    corr = 0.0  # lazy per-vertex additive correction (dangling mass)
+    for it in range(start_iter, max_iter if conv_mode else num_iters):
         t0 = time.time()
         # correction via broadcast 1-row LocalRelation: codegen-stable
         corr_df = spark.createDataFrame([(float(corr),)], "corr double")
-        src_ranks = ranks_raw.crossJoin(F.broadcast(corr_df)).select(
-            F.col("id").alias("src"), (F.col("rank") + F.col("corr")).alias("rank")
+        src_ranks = state.crossJoin(F.broadcast(corr_df)).select(
+            F.col("id").alias("src"), (F.col("rank") + F.col("corr")).alias("rank"),
+            "dang",
         )
         # replicate each src's rank to exactly the salts/buckets its blocks
-        # occupy (hub-free 1-D graphs skip the join: every block has salt 0)
+        # occupy (hub-free 1-D graphs skip the join: every block has salt 0).
+        # The joins are outer on the state side, so a vertex without blocks
+        # (no out-links) still yields one row, with null dsts.
         if dst_buckets:
             ranks_repl = (
-                src_ranks.join(bucket_map.hint("shuffle_hash"), "src")
-                .select("src", "rank", F.explode("dstbs").alias("dstb"))
+                src_ranks.join(bucket_map.hint("shuffle_hash"), "src", "left")
+                .select("src", "rank", "dang", F.explode_outer("dstbs").alias("dstb"))
             )
             # blocks are partitioned on dstb alone (a subset of the join
             # keys): only the replicated V-row state shuffles, and every
             # dst key the task emits belongs to its own bucket class
-            joined = blocks.join(ranks_repl.hint("shuffle_hash"), ["src", "dstb"])
+            joined = blocks.join(ranks_repl.hint("shuffle_hash"), ["src", "dstb"], "right")
         elif salt_map is None:
             # hub-free: blocks have no salt column and are partitioned on
             # src — only the V-row rank state shuffles
-            joined = blocks.join(src_ranks.hint("shuffle_hash"), "src")
+            joined = blocks.join(src_ranks.hint("shuffle_hash"), "src", "right")
         else:
             ranks_salted = (
-                src_ranks.join(salt_map.hint("shuffle_hash"), "src")
-                .select("src", "rank", F.explode("salts").alias("salt"))
+                src_ranks.join(salt_map.hint("shuffle_hash"), "src", "left")
+                .select("src", "rank", "dang", F.explode_outer("salts").alias("salt"))
             )
-            joined = blocks.join(ranks_salted.hint("shuffle_hash"), ["src", "salt"])
-        contribs = (
+            joined = blocks.join(ranks_salted.hint("shuffle_hash"), ["src", "salt"], "right")
+        # every joined row also emits its src's own state row (position 0:
+        # c null, _old = its corrected rank, dang), so one groupBy yields
+        # the summed contributions, the old rank and the dangling flag.  The
+        # state enters the plan once (the checkpoint's inherited size
+        # estimate grows additively per superstep) and no V-row join or
+        # second scan of it is left in the loop.  A hub split over several
+        # blocks emits its state row once per block: harmless under max.
+        no_dsts = F.array().cast("array<bigint>")
+        own = F.col("pos") == 0
+        agg = (
             # divide once per block row (not per exploded edge): the weight
             # projection sits below the Generate operator
             joined.select(
-                (F.col("rank") / F.col("out_degree")).alias("contrib"), "dsts"
+                "rank", "dang", (F.col("rank") / F.col("out_degree")).alias("w"),
+                F.concat(F.array("src"), F.coalesce("dsts", no_dsts)).alias("ids"),
             )
-            .select(F.explode("dsts").alias("id"), "contrib")
+            .select("rank", "dang", "w", F.posexplode("ids").alias("pos", "id"))
+            .select(
+                "id",
+                F.when(~own, F.col("w")).alias("c"),
+                F.when(own, F.col("rank")).alias("_old"),
+                F.when(own, F.col("dang")).alias("dang"),
+            )
             .groupBy("id")
-            .agg(F.sum("contrib").alias("contrib"))
+            .agg(F.sum("c").alias("c"), F.max("_old").alias("_old"),
+                 F.max("dang").alias("dang"))
+            # contributions to ids outside ``vertices`` are dropped
+            .filter(F.col("_old").isNotNull())
         )
-        new_rank = (
-            F.lit((1.0 - damping) / V)
-            + F.lit(damping) * F.coalesce(F.col("contrib"), F.lit(0.0))
-        ).alias("rank")
-        truncate = (it + 1) % lineage_truncate_every == 0
-        delta = None
-        if conv_mode and truncate:
-            # ONE job per superstep, convergence check included: the mass
-            # sum, the dangling raw mass, AND the L1 delta all ride the
-            # checkpoint job as Observation columns.  The delta needs the
-            # next correction corr' = (1-S)/V BEFORE the job runs, so S is
-            # predicted from the mass identity S = 1 - damping * dm with
-            # dm = (dangling raw mass observed LAST superstep) + corr *
-            # n_dang — exact up to FP summation noise (~1e-16), far inside
-            # the already run-to-run-nondeterministic FP envelope of the
-            # observed sums; the ranks themselves still use the OBSERVED S,
-            # bit-identical to the two-job formulation.
-            S_pred = 1.0 - damping * (sd + corr * n_dang)
-            corr_pred = (1.0 - S_pred) / V
-            upd = (
-                v.join(contribs.hint("shuffle_hash"), "id", "left")
-                .select("id", "dang", new_rank)
-                # co-partitioned V-row join (both sides hash(id, P)): no
-                # exchange, just the zip that the old delta job re-did
-                .join(
-                    ranks_raw.select("id", F.col("rank").alias("_old")).hint(
-                        "shuffle_hash"
-                    ),
-                    "id",
-                )
-            )
-            obs = Observation(f"mass_{it}")
-            upd = upd.observe(
-                obs,
-                F.sum("rank").alias("s"),
-                F.sum(
-                    F.when(F.col("dang"), F.col("rank")).otherwise(F.lit(0.0))
-                ).alias("sd"),
-                F.sum(
-                    F.abs(
-                        F.col("rank") + F.lit(corr_pred)
-                        - F.col("_old") - F.lit(corr)
-                    )
-                ).alias("delta"),
-            )
-            raw_new = upd.select("id", "rank")
-            if P != int(spark.conf.get("spark.sql.shuffle.partitions")):
-                raw_new = raw_new.repartition(P, "id")
-            raw_new = raw_new.localCheckpoint(eager=True)
-            got = obs.get
-            S = float(got["s"])
-            sd = float(got["sd"])
-            delta = float(got["delta"])
-        else:
-            raw_new = v.join(contribs.hint("shuffle_hash"), "id", "left").select(
-                "id", new_rank
-            )
-            if P != int(spark.conf.get("spark.sql.shuffle.partitions")):
-                # groupBy/join above already leave hash(id, partitions);
-                # an explicit exchange is only needed when the caller
-                # pinned a different P than the session default
-                raw_new = raw_new.repartition(P, "id")
-            if truncate:
-                # piggy-back the mass sum on the checkpoint job
-                obs = Observation(f"mass_{it}")
-                raw_new = raw_new.observe(obs, F.sum("rank").alias("s"))
-                raw_new = raw_new.localCheckpoint(eager=True)
-                S = float(obs.get["s"])
-            else:
-                S = float(raw_new.agg(F.sum("rank").alias("s")).collect()[0]["s"])
+        new_rank = F.lit((1.0 - damping) / V) + F.lit(damping) * F.coalesce(
+            F.col("c"), F.lit(0.0)
+        )
+        # the mass sum, the dangling raw mass AND the L1 delta all ride the
+        # checkpoint job as Observation columns.  The delta needs the next
+        # correction corr' = (1-S)/V BEFORE the job runs, so S is predicted
+        # from the mass identity S = 1 - damping * dm with dm = (dangling
+        # raw mass observed LAST superstep) + corr * n_dang — exact up to
+        # FP summation noise (~1e-16), far inside the already
+        # run-to-run-nondeterministic FP envelope of the observed sums; the
+        # ranks themselves use the OBSERVED S.  Fixed-iteration runs carry
+        # dang = False, so their prediction misses the dangling mass and
+        # their delta is not reported.
+        corr_pred = damping * (sd + corr * n_dang) / V
+        obs = Observation(f"mass_{it}")
+        upd = agg.select("id", "dang", new_rank.alias("rank"), "_old").observe(
+            obs,
+            F.sum("rank").alias("s"),
+            F.sum(F.when(F.col("dang"), F.col("rank")).otherwise(0.0)).alias("sd"),
+            F.sum(
+                F.abs(F.col("rank") + F.lit(corr_pred) - F.col("_old"))
+            ).alias("delta"),
+        )
+        # pin hash(id, P) even when the groupBy already produces it: the
+        # planner then drops this exchange, and AQE no longer coalesces the
+        # aggregate's shuffle, so the final aggregate and the state keep P
+        # partitions in every superstep
+        new_state = (
+            upd.select("id", "dang", "rank").repartition(P, "id").localCheckpoint(eager=True)
+        )
+        got = obs.get
+        S = float(got["s"])
+        sd = float(got["sd"])
+        delta = float(got["delta"]) if conv_mode else None
         # dangling correction from total mass: S = 1 - damping * dm
         corr_new = (1.0 - S) / V
-
-        if conv_mode and delta is None:
-            # non-truncating superstep (lineage_truncate_every > 1):
-            # legacy separate delta job
-            delta_row = (
-                raw_new.withColumnRenamed("rank", "new_rank")
-                .join(ranks_raw, "id")
-                .agg(
-                    F.sum(
-                        F.abs(
-                            F.col("new_rank") + F.lit(corr_new)
-                            - F.col("rank") - F.lit(corr)
-                        )
-                    ).alias("d")
-                )
-                .collect()[0]
-            )
-            delta = float(delta_row["d"])
-            sd = float(
-                raw_new.join(v.filter(F.col("dang")), "id", "left_semi")
-                .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("s"))
-                .collect()[0]["s"]
-            )
         secs = time.time() - t0
         m = {
             "iteration": it,
@@ -465,20 +416,19 @@ def pagerank(
             # needs no side-channel
             ckpt.save(
                 it,
-                raw_new.select("id", (F.col("rank") + F.lit(corr_new)).alias("rank")),
+                new_state.select("id", (F.col("rank") + F.lit(corr_new)).alias("rank")),
                 m,
             )
-        ranks_raw = raw_new
+        state = new_state
         corr = corr_new
-        it += 1
         # drop py4j refs to the previous superstep's checkpoint RDD so the
         # ContextCleaner can free its memory and shuffle files
         gc.collect()
         if delta is not None and delta < tol:
             break
 
-    ranks = ranks_raw.select("id", (F.col("rank") + F.lit(corr)).alias("rank"))
-    for df in (v, blocks, salt_map, bucket_map):
+    ranks = state.select("id", (F.col("rank") + F.lit(corr)).alias("rank"))
+    for df in (blocks, salt_map, bucket_map):
         if df is not None:
             df.unpersist()
     return ranks, metrics

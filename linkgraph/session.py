@@ -18,11 +18,20 @@ def default_cores() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
+def default_driver_memory() -> str:
+    """A quarter of the box's physical memory (``/proc/meminfo``)."""
+    with open("/proc/meminfo") as f:
+        for line in f:
+            if line.startswith("MemTotal:"):
+                return f"{int(line.split()[1]) // 4096}m"
+    raise RuntimeError("MemTotal not in /proc/meminfo")
+
+
 def get_spark(
     app_name: str = "linkgraph",
     cores: int | None = None,
     shuffle_partitions: int | None = None,
-    driver_memory: str = "16g",
+    driver_memory: str | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
     """Build (or fetch) a SparkSession pinned for deterministic local runs.
@@ -30,7 +39,8 @@ def get_spark(
     ``shuffle_partitions`` defaults to the core count: on a real cluster this
     would be ~2-3x total executor cores; the algorithms additionally pin
     their per-superstep partitioning explicitly so the plan does not depend
-    on this global.
+    on this global.  ``driver_memory`` defaults to the box's share
+    (:func:`default_driver_memory`).
     """
     cores = cores or default_cores()
     shuffle_partitions = shuffle_partitions or max(cores, 8)
@@ -44,7 +54,7 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", driver_memory)
+        .config("spark.driver.memory", driver_memory or default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )

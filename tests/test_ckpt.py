@@ -5,6 +5,7 @@ import json
 import os
 
 import numpy as np
+import pytest
 
 from linkgraph import datagen
 from linkgraph.algos import connected_components, pagerank
@@ -20,20 +21,27 @@ def _vec(df, col, n=V):
     return out
 
 
-def test_pagerank_resume_equals_uninterrupted(spark, edges30, tmp_path):
+# durable checkpoints store (id, rank) only: a tol-mode resume must rebuild
+# the dangling flag, or the L1 deltas (and the stopping superstep) drift
+@pytest.mark.parametrize("stop, conv", [("num_iters", {}), ("max_iter", {"tol": 1e-10})],
+                         ids=["fixed", "tol"])
+def test_pagerank_resume_equals_uninterrupted(spark, edges30, tmp_path, stop, conv):
     vertices = spark.createDataFrame([(i,) for i in range(V)], "id long")
-    full, _ = pagerank(edges30, vertices=vertices, num_iters=6, partitions=8)
+    # every 7th vertex loses its out-links: the dangling flag matters
+    edges = edges30.filter(edges30.src % 7 != 0)
 
+    def run(n, **kw):
+        return pagerank(edges, vertices=vertices, partitions=8, **{stop: n}, **conv, **kw)
+
+    full, full_m = run(6)
     ck = str(tmp_path / "pr")
-    # "killed" after 3 iterations
-    pagerank(edges30, vertices=vertices, num_iters=3, partitions=8, checkpoint_dir=ck)
-    # resume to 6
-    resumed, metrics = pagerank(
-        edges30, vertices=vertices, num_iters=6, partitions=8, checkpoint_dir=ck
-    )
+    run(3, checkpoint_dir=ck)  # "killed" after 3 iterations
+    resumed, metrics = run(6, checkpoint_dir=ck)  # resume to 6
     assert np.allclose(_vec(full, "rank"), _vec(resumed, "rank"), atol=1e-12)
     # metrics lineage covers all 6 iterations
     assert [m["iteration"] for m in metrics] == list(range(6))
+    deltas = [[m["l1_delta"] for m in ms] for ms in (full_m, metrics)]
+    assert np.allclose(*np.array(deltas, dtype=float), rtol=1e-9, equal_nan=True)
 
 
 def test_checkpoint_metrics_on_disk(spark, edges30, tmp_path):

@@ -87,7 +87,6 @@ def child(cores: int, partitions: int, mult: int) -> None:
 
     spark = get_spark(
         f"scaling-{cores}", cores=cores, shuffle_partitions=partitions,
-        driver_memory="48g",
         # pinned per-superstep partitioning: do NOT let AQE coalesce the
         # iterative shuffles below the configured parallelism (at 100 TB the
         # advisory size would keep P >> cores anyway; at bench scale it
@@ -147,8 +146,7 @@ def prep(mult: int) -> None:
     """Stage the derived table on all cores (not a measured config)."""
     from linkgraph.session import get_spark
 
-    spark = get_spark("scaling-prep", cores=32, shuffle_partitions=64,
-                      driver_memory="48g")
+    spark = get_spark("scaling-prep", cores=32, shuffle_partitions=64)
     derived_edges(spark, SF_DIR, mult, 64)
     spark.stop()
 

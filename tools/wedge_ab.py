@@ -57,8 +57,7 @@ def main():
     from linkgraph.session import get_spark
     from linkgraph.algos.triangles import degree_ranked_oriented, _rank_lt
 
-    spark = get_spark("wedge-ab", cores=cores, shuffle_partitions=2 * cores,
-                      driver_memory="48g")
+    spark = get_spark("wedge-ab", cores=cores, shuffle_partitions=2 * cores)
 
     bg = datagen.rmat_edges(spark, bg_edges, 18, partitions=2 * cores)
     # hub at a MID-RANGE id with neighbors on both id-sides: this is the
