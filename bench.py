@@ -82,13 +82,14 @@ def skew_edges(spark, partitions: int):
 
 
 def main():
+    from linkgraph.session import default_cores, get_spark
+
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cores = default_cores()
     P = int(os.environ.get("SPARK_GRAFT_PARTITIONS", str(2 * cores)))
     REPS = int(os.environ.get("SPARK_GRAFT_REPS", "5"))
     WARMUP = int(os.environ.get("SPARK_GRAFT_WARMUP", "1"))
 
-    from linkgraph.session import get_spark
     from linkgraph.algos import (
         connected_components,
         label_propagation,

@@ -43,11 +43,7 @@ import time
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .gcommon import _ckpt
-
-PRI_A = 1_000_003
-PRI_B = 12345
-PRI_M = (1 << 31) - 1
+from .gcommon import PRI_A, PRI_B, PRI_M, _ckpt, norm_edges
 
 
 def jones_plassmann_coloring(
@@ -66,16 +62,10 @@ def jones_plassmann_coloring(
     spark = edges.sparkSession
     P = int(partitions or spark.conf.get("spark.sql.shuffle.partitions"))
 
-    und = (
-        edges.select("src", "dst")
-        .union(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .filter(F.col("src") != F.col("dst"))
-        .dropDuplicates(["src", "dst"])
-    )
     pri = lambda c: (F.col(c) * PRI_A + PRI_B) % PRI_M  # noqa: E731
 
     # full adjacency (never shrinks: colored neighbors feed the mex)
-    full = _ckpt(und, P, "src")
+    full = norm_edges(edges, P, materialize="checkpoint")
     active = _ckpt(full.select(F.col("src").alias("id")).distinct(), P, "id")
     ae = full  # active-only adjacency (shrinks each round)
     colors = spark.createDataFrame([], "id long, color int")
@@ -117,7 +107,7 @@ def jones_plassmann_coloring(
                        P, "id")
         n_active = active.count()
         metrics.append(
-            {"round": rnd, "winners": winners.count(), "active": n_active,
+            {"iteration": rnd, "winners": winners.count(), "active": n_active,
              "seconds": time.time() - t0}
         )
         if n_active == 0:

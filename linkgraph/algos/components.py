@@ -5,7 +5,10 @@ id; each superstep takes the min over {own label} ∪ {neighbor labels};
 terminates when no label changes.  Converges in O(diameter) supersteps;
 each superstep joins the V-row label state against pinned CSR-style
 adjacency blocks (pagerank.adjacency_blocks: hubs split/salted, join keys
-~V rows not E) and takes one map-side-combined grouped min.
+~V rows not E) and takes one map-side-combined grouped min.  The loop is
+:func:`label_fixpoint` (shared with label propagation) on
+``gcommon.fixpoint``: one Spark job per superstep, the change count
+observed on the state checkpoint.
 
 Exactness gate: labels equal the BFS oracle exactly (label = min vertex id
 in the component) — the analogue of the reference's exact counters in
@@ -14,15 +17,63 @@ in the component) — the analogue of the reference's exact counters in
 
 from __future__ import annotations
 
-import gc
-import time
+from typing import Callable
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..ckpt import CheckpointManager
-from .gcommon import norm_edges
-from .pagerank import adjacency_blocks
+from .gcommon import fixpoint, norm_edges
+from .pagerank import adjacency_blocks, block_join
+
+
+def label_fixpoint(
+    edges: DataFrame,
+    vertices: DataFrame | None,
+    P: int,
+    max_iter: int,
+    checkpoint_dir: str | None,
+    init: Callable[[DataFrame], DataFrame],
+    update: Callable[[DataFrame, DataFrame], DataFrame],
+) -> tuple[DataFrame, list[dict]]:
+    """The label loops' shared body (CC, LP).
+
+    Pins the vertex table on id and packs the undirected view into
+    adjacency blocks once; ``init(v)`` builds the start labels ``(id,
+    label column)`` from the vertex table.  Each superstep sends every
+    src's label to its neighbors through the blocks (only the V-row label
+    state shuffles) and ``update(labels, nb)`` merges the received rows
+    ``nb(id, label column)`` into the new labels plus a ``_chg`` flag.
+    Stops when no label changes; records carry ``labels_changed`` and the
+    edge throughput."""
+    if vertices is None:
+        vertices = (
+            edges.select(F.col("src").alias("id"))
+            .union(edges.select(F.col("dst").alias("id")))
+            .distinct()
+        )
+    v = vertices.select("id").repartition(P, "id").persist()
+    blocks, salt_map = adjacency_blocks(norm_edges(edges, P, materialize="none"), P)
+    E = int(blocks.agg(F.sum(F.size("dsts"))).collect()[0][0] or 0)
+
+    def step(labels: DataFrame) -> DataFrame:
+        j = block_join(blocks, salt_map, labels.withColumnRenamed("id", "src"))
+        return update(labels, j.select(F.explode("dsts").alias("id"), *labels.columns[1:]))
+
+    labels, metrics = fixpoint(
+        init(v), step, P, ("id",), max_iter,
+        stop=lambda m, _: m["labels_changed"] == 0,
+        counters={"labels_changed": "_chg"},
+        checkpoint_dir=checkpoint_dir,
+        extra=lambda m: {
+            "edges_processed": E,
+            "edges_per_sec": E / m["seconds"] if m["seconds"] > 0 else None,
+            "num_partitions": P,
+        },
+    )
+    for df in (v, blocks, salt_map):
+        if df is not None:
+            df.unpersist()
+    return labels, metrics
 
 
 def connected_components(
@@ -45,106 +96,29 @@ def connected_components(
     spark = edges.sparkSession
     P = int(partitions or spark.conf.get("spark.sql.shuffle.partitions"))
 
-    if vertices is None:
-        vertices = (
-            edges.select(F.col("src").alias("id"))
-            .union(edges.select(F.col("dst").alias("id")))
-            .distinct()
-        )
-    v = vertices.select("id").repartition(P, "id").persist()
-
-    sym = (
-        edges.select("src", "dst")
-        .union(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .filter(F.col("src") != F.col("dst"))
-        .dropDuplicates(["src", "dst"])
-    )
-    # CSR-style adjacency blocks (see pagerank.adjacency_blocks): the
-    # per-superstep join touches ~V block rows instead of E edge rows;
-    # hub vertices split/salted across blocks
-    blocks, salt_map = adjacency_blocks(sym, P)
-    E = int(blocks.agg(F.sum(F.size("dsts"))).collect()[0][0] or 0)
-
-    ckpt = CheckpointManager(checkpoint_dir) if checkpoint_dir else None
-    metrics: list[dict] = []
-    start_iter = 0
-    if ckpt is not None and (last := ckpt.latest()) is not None:
-        labels, _ = ckpt.load(spark, last)
-        labels = labels.repartition(P, "id").localCheckpoint(eager=True)
-        metrics = ckpt.history()
-        start_iter = last + 1
-    elif initial_labels is not None:
+    def init(v: DataFrame) -> DataFrame:
+        if initial_labels is None:
+            return v.select("id", F.col("id").alias("component"))
         # vertices absent from the warm labels (new pages in the delta)
         # start from their own id, same as a cold start
-        labels = (
+        return (
             v.join(initial_labels.select("id", F.col("component").alias("_w")),
                    "id", "left")
             .select("id", F.coalesce(F.least(F.col("_w"), F.col("id")),
                                      F.col("id")).alias("component"))
-            .repartition(P, "id")
-            .localCheckpoint(eager=True)
         )
-    else:
-        labels = v.select("id", F.col("id").alias("component")).localCheckpoint(eager=True)
 
-    for it in range(start_iter, max_iter):
-        t0 = time.time()
-        # blocks keep their pinned (src, salt) partitioning; only the V-row
-        # label state shuffles, then one map-side-combined grouped min
-        lab_src = labels.select(F.col("id").alias("src"), "component")
-        if salt_map is None:
-            # hub-free: blocks carry no salt column (src-partitioned)
-            j = blocks.join(lab_src.hint("shuffle_hash"), "src")
-        else:
-            lab_salted = lab_src.join(
-                salt_map.hint("shuffle_hash"), "src"
-            ).select("src", "component", F.explode("salts").alias("salt"))
-            j = blocks.join(lab_salted.hint("shuffle_hash"), ["src", "salt"])
-        nb_min = (
-            j.select(F.explode("dsts").alias("id"), "component")
-            .groupBy("id")
-            .agg(F.min("component").alias("nb_component"))
+    def update(labels: DataFrame, nb: DataFrame) -> DataFrame:
+        nb_min = nb.groupBy("id").agg(F.min("component").alias("nb_component"))
+        return labels.join(nb_min.hint("shuffle_hash"), "id", "left").select(
+            "id",
+            F.least(
+                F.col("component"), F.coalesce("nb_component", F.col("component"))
+            ).alias("component"),
+            (F.col("nb_component") < F.col("component")).alias("_chg"),
         )
-        obs = Observation(f"cc_changes_{it}")
-        updated = (
-            labels.join(nb_min.hint("shuffle_hash"), "id", "left")
-            .select(
-                "id",
-                F.least(
-                    F.col("component"), F.coalesce("nb_component", F.col("component"))
-                ).alias("component"),
-                (F.col("nb_component") < F.col("component")).alias("_changed"),
-            )
-            .repartition(P, "id")
-            # change count piggy-backs on the checkpoint job (one job/superstep)
-            .observe(obs, F.coalesce(
-                F.sum(F.col("_changed").cast("long")), F.lit(0)).alias("c"))
-            .localCheckpoint(eager=True)
-        )
-        changes = int(obs.get["c"])
-        new_labels = updated.select("id", "component")
-        secs = time.time() - t0
-        m = {
-            "iteration": it,
-            "labels_changed": int(changes),
-            "seconds": secs,
-            "edges_processed": E,
-            "edges_per_sec": E / secs if secs > 0 else None,
-            "num_partitions": P,
-        }
-        metrics.append(m)
-        if ckpt is not None:
-            ckpt.save(it, new_labels, m)
-        labels = new_labels
-        gc.collect()  # release prior superstep's checkpoint RDD + shuffles
-        if changes == 0:
-            break
 
-    v.unpersist()
-    blocks.unpersist()
-    if salt_map is not None:
-        salt_map.unpersist()
-    return labels, metrics
+    return label_fixpoint(edges, vertices, P, max_iter, checkpoint_dir, init, update)
 
 
 def connected_components_star(

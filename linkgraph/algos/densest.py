@@ -73,8 +73,10 @@ def densest_subgraph(
                   "b", "left_semi"),
             P, "a",
         )
-        metrics.append({"round": rnd, "V": nv, "E": ne,
+        metrics.append({"iteration": rnd, "V": nv, "E": ne,
                         "density_e9": key, "seconds": time.time() - t0})
 
+    if best_v is None:  # no non-loop edge: empty or self-loops only
+        return spark.createDataFrame([], "id long, density_e9 long"), metrics
     out = best_v.select("id", F.lit(best_key).cast("long").alias("density_e9"))
     return _ckpt(out, P, "id"), metrics

@@ -2,20 +2,19 @@
 
 Repeatedly remove vertices of undirected degree < k until none remain; the
 survivors are the k-core.  Each round is one grouped degree count + one
-broadcast-able semi-join filter (the removed set shrinks the edge table);
-lineage truncated per round.  Converges in O(peeling depth) rounds; early
-exit when a round removes nothing.  New link-graph capability (no
-reference analogue); oracle: oracles.kcore_oracle.
+broadcast-able semi-join filter (the removed set shrinks the edge table),
+run as a ``gcommon.fixpoint`` round: one Spark job, lineage truncated.
+Converges in O(peeling depth) rounds; early exit when a round removes
+nothing (the checkpoint's observed row count is unchanged).  New link-graph
+capability (no reference analogue); oracle: oracles.kcore_oracle.
 """
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .gcommon import norm_edges
+from .gcommon import fixpoint, norm_edges
 
 
 def kcore_vertices(
@@ -28,32 +27,22 @@ def kcore_vertices(
     spark = edges.sparkSession
     P = int(partitions or spark.conf.get("spark.sql.shuffle.partitions"))
 
-    sym = (
-        edges.select("src", "dst")
-        .union(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .filter(F.col("src") != F.col("dst"))
-        .dropDuplicates(["src", "dst"])
-        .repartition(P, "src")
-        .localCheckpoint(eager=True)
-    )
-    for _ in range(max_rounds):
+    def peel(sym: DataFrame) -> DataFrame:
         keep = (
             sym.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
             .filter(F.col("d") >= k)
             .select("src")
         )
-        pruned = (
+        return (
             sym.join(keep.hint("shuffle_hash"), "src", "left_semi")
             .join(keep.withColumnRenamed("src", "dst").hint("shuffle_hash"),
                   "dst", "left_semi")
-            .repartition(P, "src")
-            .localCheckpoint(eager=True)
         )
-        before = sym.count()
-        after = pruned.count()
-        sym = pruned
-        if after == before:
-            break
+
+    sym, _ = fixpoint(
+        norm_edges(edges, P, materialize="none"), peel, P, ("src",), max_rounds,
+        stop=lambda m, prev: m["rows"] == prev["rows"],
+    )
     return sym.select(F.col("src").alias("id")).distinct()
 
 
@@ -81,15 +70,7 @@ def core_numbers(
 
     sym = norm_edges(edges, P)
 
-    core = (
-        sym.groupBy("src").agg(F.count(F.lit(1)).alias("core"))
-        .withColumnRenamed("src", "id")
-        .repartition(P, "id")
-        .localCheckpoint(eager=True)
-    )
-    metrics: list[dict] = []
-    for rnd in range(1, max_rounds + 1):
-        t0 = time.time()
+    def hindex(core: DataFrame) -> DataFrame:
         # neighbor core values, ranked descending per vertex;
         # H-index = max(min(rank, neighbor_core))
         nb = sym.join(
@@ -103,26 +84,20 @@ def core_numbers(
             .groupBy("src")
             .agg(F.max(F.least(F.col("_rn").cast("long"), F.col("nc"))).alias("h"))
         )
-        new_core = (
+        return (
             core.join(h.withColumnRenamed("src", "id").hint("shuffle_hash"), "id")
             .select("id", F.least("core", "h").alias("core"),
                     (F.col("h") < F.col("core")).alias("_drop"))
         )
-        # drop-count rides the checkpoint job — the H-index window sort
-        # (the engine's only sorting loop) runs ONCE per round
-        from pyspark.sql import Observation
 
-        obs = Observation(f"hidx_{rnd}")
-        core = (
-            new_core.repartition(P, "id")
-            .observe(obs, F.coalesce(
-                F.sum(F.col("_drop").cast("long")), F.lit(0)).alias("c"))
-            .localCheckpoint(eager=True)
-            .select("id", "core")
-        )
-        dropped = int(obs.get["c"])
-        metrics.append({"round": rnd, "dropped": dropped, "seconds": time.time() - t0})
-        if dropped == 0:
-            break
+    # the drop count rides the checkpoint job — the H-index window sort
+    # (the engine's only sorting loop) runs ONCE per round
+    core, metrics = fixpoint(
+        sym.groupBy("src").agg(F.count(F.lit(1)).alias("core"))
+        .withColumnRenamed("src", "id"),
+        hindex, P, ("id",), max_rounds,
+        stop=lambda m, _: m["dropped"] == 0,
+        counters={"dropped": "_drop"},
+    )
     sym.unpersist()
     return core, metrics

@@ -21,6 +21,12 @@ and the per-round state is the edge list hash-partitioned on ``a``.
 Termination: at most E rounds, in practice a handful (each round removes
 at least one edge or stops).
 
+The full decomposition (truss_numbers) is an edge h-index fixpoint over
+one static triangle-membership table, run on ``gcommon.fixpoint``: one
+Spark job per round, the count of edges whose value changed observed on
+the round's state checkpoint.  The state enters each round's plan once,
+so the checkpoint's inherited size estimate grows additively per round.
+
 Oracle: unrolled peel SQL (MATERIALIZED per round — each round is
 referenced by the next) in suite.py plus a brute-force pytest oracle.
 
@@ -36,7 +42,7 @@ import time
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .gcommon import _ckpt
+from .gcommon import _ckpt, fixpoint
 
 
 def _rank_table(e: DataFrame, P: int) -> DataFrame:
@@ -119,7 +125,7 @@ def ktruss_edges(
         e2 = _ckpt(e.join(keep.hint("shuffle_hash"), ["a", "b"], "left_semi"), P, "a")
         n2 = e2.count()
         metrics.append(
-            {"round": rnd, "edges": n2, "removed": n - n2, "seconds": time.time() - t0}
+            {"iteration": rnd, "edges": n2, "removed": n - n2, "seconds": time.time() - t0}
         )
         e, done = e2, n2 == n
         n = n2
@@ -142,12 +148,15 @@ def truss_numbers(
     t_0(e) = support(e); t_{i+1}(e) = h-index of the multiset
     { min(t_i(e'), t_i(e'')) : triangles (e, e', e'') }.  The sequence is
     monotone non-increasing per edge and converges to trussness(e) - 2,
-    so no peeling loop nesting: ONE static triangle-edge incidence table
+    so no peeling loop nesting: ONE static triangle-membership table
     (the exact counter's degree-ordered wedge+closure join, built once)
-    and one join + windowed h-index per round.
+    and per round one state join, one per-triangle gather and one
+    windowed h-index.
 
-    Scale: per-round state is one t row per edge, hash-partitioned the
-    same way every round; the h-index window partitions by EDGE, so its
+    Scale: per-round state is one t row per edge on a triangle,
+    hash-partitioned the same way every round, as is the membership
+    table (the state join moves no membership row); the h-index window
+    partitions by EDGE, so its
     group size is that edge's support — bounded by the max hub-pair
     support, never by |E| (an extreme-hub variant would bucket the
     support histogram instead; the window form keeps whole-stage codegen).
@@ -168,71 +177,52 @@ def truss_numbers(
         "a",
     )
     tri = _tri_id_sorted(e)
-    # one incidence row per (triangle, member edge), carrying the OTHER
-    # two member edges' keys — built once, reused every round
+    # one membership row per (triangle, member edge) — built once, reused
+    # every round, pinned on the edge key like the state
     inc = _ckpt(
-        tri.select(
-            F.col("x").alias("ea"), F.col("y").alias("eb"),
-            F.col("x").alias("o1a"), F.col("z").alias("o1b"),
-            F.col("y").alias("o2a"), F.col("z").alias("o2b"),
-        ).union(tri.select(
-            F.col("x").alias("ea"), F.col("z").alias("eb"),
-            F.col("x").alias("o1a"), F.col("y").alias("o1b"),
-            F.col("y").alias("o2a"), F.col("z").alias("o2b"),
-        )).union(tri.select(
-            F.col("y").alias("ea"), F.col("z").alias("eb"),
-            F.col("x").alias("o1a"), F.col("y").alias("o1b"),
-            F.col("x").alias("o2a"), F.col("z").alias("o2b"),
-        )),
-        P, "ea",
-    )
-    supp = inc.groupBy("ea", "eb").agg(F.count(F.lit(1)).alias("t"))
-    cur = _ckpt(
-        e.join(supp.withColumnRenamed("ea", "a").withColumnRenamed("eb", "b"),
-               ["a", "b"], "left")
-        .select("a", "b", F.coalesce(F.col("t"), F.lit(0)).cast("long").alias("t")),
-        P, "a",
+        tri.select("x", "y", "z", F.col("x").alias("a"), F.col("y").alias("b"))
+        .union(tri.select("x", "y", "z", F.col("x").alias("a"), F.col("z").alias("b")))
+        .union(tri.select("x", "y", "z", F.col("y").alias("a"), F.col("z").alias("b"))),
+        P, "a", "b",
     )
 
     from pyspark.sql import Window
 
-    metrics: list[dict] = []
-    for rnd in range(max_rounds):
-        t0 = time.time()
-        t1 = cur.select(F.col("a").alias("o1a"), F.col("b").alias("o1b"),
-                        F.col("t").alias("t1"))
-        t2 = cur.select(F.col("a").alias("o2a"), F.col("b").alias("o2b"),
-                        F.col("t").alias("t2"))
-        vals = (
-            inc.join(t1.hint("shuffle_hash"), ["o1a", "o1b"])
-            .join(t2.hint("shuffle_hash"), ["o2a", "o2b"])
-            .select("ea", "eb", F.least("t1", "t2").alias("v"))
+    def hindex(cur: DataFrame) -> DataFrame:
+        # the state enters the plan once: each triangle gathers its three
+        # (t, edge) rows sorted, and every member takes the min of the
+        # OTHER two — s[1].t for the smallest, s[0].t for the others
+        s = (
+            inc.join(cur.hint("shuffle_hash"), ["a", "b"])
+            .groupBy("x", "y", "z")
+            .agg(F.array_sort(F.collect_list(F.struct("t", "a", "b"))).alias("s"))
         )
-        win = Window.partitionBy("ea", "eb").orderBy(F.col("v").desc())
-        h = (
+        vals = s.select(
+            F.posexplode("s").alias("pos", "m"),
+            F.col("s")[0]["t"].alias("t0"), F.col("s")[1]["t"].alias("t1"),
+        ).select(
+            F.col("m.a").alias("a"), F.col("m.b").alias("b"),
+            F.col("m.t").alias("old"),
+            F.when(F.col("pos") == 0, F.col("t1")).otherwise(F.col("t0")).alias("v"),
+        )
+        win = Window.partitionBy("a", "b").orderBy(F.col("v").desc())
+        return (
             vals.withColumn("rn", F.row_number().over(win))
-            .groupBy("ea", "eb")
+            .groupBy("a", "b")
             .agg(F.max(F.when(F.col("v") >= F.col("rn"), F.col("rn"))
-                       .otherwise(F.lit(0))).alias("h"))
+                       .otherwise(F.lit(0))).cast("long").alias("t"),
+                 F.max("old").alias("old"))
+            .select("a", "b", "t", (F.col("t") != F.col("old")).alias("_chg"))
         )
-        nxt = _ckpt(
-            cur.join(
-                h.withColumnRenamed("ea", "a").withColumnRenamed("eb", "b")
-                .hint("shuffle_hash"),
-                ["a", "b"], "left",
-            ).select(
-                "a", "b",
-                F.coalesce(F.col("h"), F.lit(0)).cast("long").alias("t"),
-            ),
-            P, "a",
-        )
-        changed = (
-            nxt.alias("n").join(cur.alias("c"), ["a", "b"])
-            .filter(F.col("n.t") != F.col("c.t")).count()
-        )
-        metrics.append({"round": rnd, "changed": changed,
-                        "seconds": time.time() - t0})
-        cur = nxt
-        if changed == 0:
-            break
-    return cur.select("a", "b", (F.col("t") + 2).alias("trussness")), metrics
+
+    # the state holds the edges on a triangle, t_0 = support; the others
+    # keep t = 0 (trussness 2) throughout
+    cur, metrics = fixpoint(
+        inc.groupBy("a", "b").agg(F.count(F.lit(1)).cast("long").alias("t")),
+        hindex, P, ("a", "b"), max_rounds,
+        stop=lambda m, _: m["changed"] == 0,
+        counters={"changed": "_chg"},
+    )
+    off = e.join(cur, ["a", "b"], "left_anti").select(
+        "a", "b", F.lit(2).cast("long").alias("trussness"))
+    return cur.select("a", "b", (F.col("t") + 2).alias("trussness")).union(off), metrics

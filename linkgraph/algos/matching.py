@@ -29,11 +29,7 @@ import time
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .gcommon import _ckpt
-
-PRI_A = 1_000_003
-PRI_B = 12345
-PRI_M = (1 << 31) - 1
+from .gcommon import PRI_A, PRI_B, PRI_M, _ckpt
 
 
 def _key():
@@ -81,7 +77,7 @@ def maximal_matching(
             P, "a",
         )
         n_w = w.count()
-        metrics.append({"round": rnd, "matched": n_w, "seconds": time.time() - t0})
+        metrics.append({"iteration": rnd, "matched": n_w, "seconds": time.time() - t0})
         if n_w == 0:
             break
         parts.append(w)

@@ -24,11 +24,7 @@ import time
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .gcommon import _ckpt
-
-PRI_A = 1_000_003
-PRI_B = 12345
-PRI_M = (1 << 31) - 1
+from .gcommon import PRI_A, PRI_B, PRI_M, _ckpt, norm_edges
 
 
 def maximal_independent_set(
@@ -40,18 +36,10 @@ def maximal_independent_set(
     spark = edges.sparkSession
     P = int(partitions or spark.conf.get("spark.sql.shuffle.partitions"))
 
-    und = (
-        edges.select("src", "dst")
-        .union(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .filter(F.col("src") != F.col("dst"))
-        .dropDuplicates(["src", "dst"])
-    )
     pri = lambda c: (F.col(c) * PRI_A + PRI_B) % PRI_M  # noqa: E731
 
-    active = _ckpt(
-        und.select(F.col("src").alias("id")).distinct(), P, "id"
-    )
-    ae = _ckpt(und, P, "src")
+    ae = norm_edges(edges, P, materialize="checkpoint")
+    active = _ckpt(ae.select(F.col("src").alias("id")).distinct(), P, "id")
     mis_parts: list[DataFrame] = []
     metrics: list[dict] = []
 
@@ -84,7 +72,7 @@ def maximal_independent_set(
         )
         n_active = active.count()
         metrics.append(
-            {"round": rnd, "winners": n_win, "active": n_active,
+            {"iteration": rnd, "winners": n_win, "active": n_active,
              "seconds": time.time() - t0}
         )
         if n_active == 0:

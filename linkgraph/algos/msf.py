@@ -75,7 +75,7 @@ def boruvka_msf(
         )
         n_live = el.count()
         if n_live == 0:
-            metrics.append({"round": rnd, "live": 0, "chosen": 0,
+            metrics.append({"iteration": rnd, "live": 0, "chosen": 0,
                             "seconds": time.time() - t0})
             break
         key = F.struct(
@@ -109,7 +109,7 @@ def boruvka_msf(
             .select("id", F.coalesce("newc", "comp").alias("comp")),
             P, "id",
         )
-        metrics.append({"round": rnd, "live": n_live,
+        metrics.append({"iteration": rnd, "live": n_live,
                         "chosen": chosen.count(),
                         "seconds": time.time() - t0})
 

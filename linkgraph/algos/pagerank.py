@@ -148,6 +148,20 @@ def adjacency_blocks(
     return blocks, salt_map
 
 
+def block_join(blocks: DataFrame, salt_map: DataFrame | None,
+               src_state: DataFrame) -> DataFrame:
+    """Inner join of a src-keyed V-row state onto the pinned blocks: only
+    the state shuffles.  With hubs, each src row is first replicated to
+    exactly the salts its blocks occupy (``salt_map``)."""
+    if salt_map is None:
+        # hub-free: blocks carry no salt column (src-partitioned)
+        return blocks.join(src_state.hint("shuffle_hash"), "src")
+    salted = src_state.join(salt_map.hint("shuffle_hash"), "src").select(
+        *src_state.columns, F.explode("salts").alias("salt")
+    )
+    return blocks.join(salted.hint("shuffle_hash"), ["src", "salt"])
+
+
 def bucketed_adjacency_blocks(
     edges: DataFrame,
     partitions: int,
@@ -481,15 +495,8 @@ def personalized_pagerank(
             .collect()[0]["s"]
         )
         src_ranks = ranks.select(F.col("id").alias("src"), "rank")
-        if salt_map is None:
-            joined = blocks.join(src_ranks.hint("shuffle_hash"), "src")
-        else:
-            salted = src_ranks.join(salt_map.hint("shuffle_hash"), "src").select(
-                "src", "rank", F.explode("salts").alias("salt")
-            )
-            joined = blocks.join(salted.hint("shuffle_hash"), ["src", "salt"])
         contribs = (
-            joined.select(
+            block_join(blocks, salt_map, src_ranks).select(
                 (F.col("rank") / F.col("out_degree")).alias("contrib"), "dsts"
             )
             .select(F.explode("dsts").alias("id"), "contrib")

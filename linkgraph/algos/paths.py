@@ -5,7 +5,9 @@ Frontier-expansion BFS as iterative DataFrame joins: the discovered state
 *frontier* (vertices discovered last round) against the edge table, then
 anti-joins the already-discovered set — so per-superstep work is
 O(edges touched by the frontier), not O(E).  Lineage is truncated every
-superstep (``localCheckpoint``), mirroring the engine's PageRank/CC loops.
+superstep (``localCheckpoint``).  Weighted shortest paths
+(:func:`sssp_distances`) relax the whole distance state per superstep on
+``gcommon.fixpoint``, the engine's one-job-per-round loop.
 
 Scale notes: the frontier join shuffles on ``src`` and the dedup/anti-join
 on ``id`` — both pinned at ``partitions``; at web scale the frontier is
@@ -19,10 +21,10 @@ from __future__ import annotations
 
 import time
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .gcommon import norm_edges
+from .gcommon import fixpoint, norm_edges
 
 
 def bfs_distances(
@@ -111,22 +113,14 @@ def sssp_distances(
     )
     e.count()
 
-    state = (
-        sources.select("id").distinct()
-        .select("id", F.lit(0).cast("long").alias("dist"))
-        .repartition(P, "id")
-        .localCheckpoint(eager=True)
-    )
-    metrics: list[dict] = []
-    for it in range(1, max_iter + 1):
-        t0 = time.time()
+    def relax(state: DataFrame) -> DataFrame:
         cand = (
             e.join(state.withColumnRenamed("id", "src").hint("shuffle_hash"), "src")
             .select(F.col("dst").alias("id"), (F.col("dist") + F.col("w")).alias("nd"))
             .groupBy("id")
             .agg(F.min("nd").alias("nd"))
         )
-        merged = (
+        return (
             state.join(cand.hint("shuffle_hash"), "id", "full")
             .select(
                 "id",
@@ -136,23 +130,16 @@ def sssp_distances(
                 ).alias("_improved"),
             )
         )
-        # improved-count rides the checkpoint job (Observation) — the
-        # relaxation join + grouped min run ONCE per superstep
-        obs = Observation(f"sssp_{it}")
-        new_state = (
-            merged.select("id", "dist", "_improved")
-            .repartition(P, "id")
-            .observe(obs, F.coalesce(
-                F.sum(F.col("_improved").cast("long")), F.lit(0)).alias("c"))
-            .localCheckpoint(eager=True)
-            .select("id", "dist")
-        )
-        improved = int(obs.get["c"])
-        metrics.append({"iteration": it, "improved": improved,
-                        "seconds": time.time() - t0})
-        state = new_state
-        if improved == 0:
-            break
+
+    # the improved count rides the checkpoint job (gcommon.fixpoint) — the
+    # relaxation join + grouped min run ONCE per superstep
+    state, metrics = fixpoint(
+        sources.select("id").distinct()
+        .select("id", F.lit(0).cast("long").alias("dist")),
+        relax, P, ("id",), max_iter,
+        stop=lambda m, _: m["improved"] == 0,
+        counters={"improved": "_improved"},
+    )
     e.unpersist()
     return state, metrics
 

@@ -35,7 +35,7 @@ import time
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .gcommon import _ckpt
+from .gcommon import _ckpt, fixpoint
 
 
 def strongly_connected_components(
@@ -94,7 +94,7 @@ def strongly_connected_components(
             )
         n_active = active_v.count()
         if n_active == 0:
-            metrics.append({"round": rnd, "trimmed_to": 0, "seconds": time.time() - t0})
+            metrics.append({"iteration": rnd, "trimmed_to": 0, "seconds": time.time() - t0})
             break
 
         # ---- 2. forward min-label coloring to fixpoint
@@ -171,7 +171,7 @@ def strongly_connected_components(
             P, "src",
         )
         metrics.append(
-            {"round": rnd, "assigned": n_assigned, "active_after": n_active - n_assigned,
+            {"iteration": rnd, "assigned": n_assigned, "active_after": n_active - n_assigned,
              "seconds": time.time() - t0}
         )
         if active_v.count() == 0:
@@ -197,8 +197,10 @@ def condensation_levels(
     Contracts each SCC to its label, keeps the distinct inter-component
     edges (a DAG by construction), then runs synchronous longest-path
     relaxation:  level(c) ← max(level(c), max_{p→c} level(p)+1), one
-    grouped-max join per superstep, until fixpoint (≤ DAG-depth rounds —
-    O(log)-ish for web bow-ties whose condensation is shallow).
+    grouped-max join per superstep (one Spark job on ``gcommon.fixpoint``,
+    the raised-level count observed on its checkpoint), until fixpoint
+    (≤ DAG-depth rounds — O(log)-ish for web bow-ties whose condensation
+    is shallow).
 
     Returns (scc, level, n_vertices).  Exact; SQL twin unrolls the
     relaxation (12 rounds: measured depth ≤ 6 on every derived graph).
@@ -220,28 +222,24 @@ def condensation_levels(
         .dropDuplicates(["src", "dst"]),
         P, "src",
     )
-    lvl = _ckpt(
-        sizes.select(F.col("scc").alias("id"), F.lit(0).cast("long").alias("lvl")),
-        P, "id",
-    )
-    for _ in range(max_rounds):
+
+    def relax(lvl: DataFrame) -> DataFrame:
         upd = (
             cond.join(lvl.withColumnRenamed("id", "src").hint("shuffle_hash"), "src")
             .groupBy(F.col("dst").alias("id"))
             .agg((F.max("lvl") + 1).alias("nl"))
         )
-        new_lvl = _ckpt(
-            lvl.join(upd.hint("shuffle_hash"), "id", "left")
-            .select("id", F.greatest("lvl", F.coalesce("nl", F.lit(0))).alias("lvl")),
-            P, "id",
+        return lvl.join(upd.hint("shuffle_hash"), "id", "left").select(
+            "id", F.greatest("lvl", F.coalesce("nl", F.lit(0))).alias("lvl"),
+            (F.coalesce("nl", F.lit(0)) > F.col("lvl")).alias("_chg"),
         )
-        changed = (
-            new_lvl.alias("n").join(lvl.alias("o"), "id")
-            .filter(F.col("n.lvl") != F.col("o.lvl")).count()
-        )
-        lvl = new_lvl
-        if changed == 0:
-            break
+
+    lvl, _ = fixpoint(
+        sizes.select(F.col("scc").alias("id"), F.lit(0).cast("long").alias("lvl")),
+        relax, P, ("id",), max_rounds,
+        stop=lambda m, _: m["changed"] == 0,
+        counters={"changed": "_chg"},
+    )
     return lvl.select(F.col("id").alias("scc"), F.col("lvl").alias("level")).join(
         sizes, "scc"
     ).select("scc", "level", F.col("n_vertices").cast("long").alias("n_vertices"))

@@ -4,8 +4,10 @@ Assigns every reachable vertex to its closest seed — ties broken by the
 smaller seed label — via synchronous struct-min supersteps over the
 state ``(dist, seed)``: per round one adjacency⋈state join, one grouped
 struct-min (map-side combinable), and one full-outer merge taking the
-lexicographic minimum of old state and best neighbor candidate.  The
-struct order (dist, seed) is a total order, so the fixpoint is unique
+lexicographic minimum of old state and best neighbor candidate; the
+merge also flags the vertices it changed, and that count rides the
+round's checkpoint job (``gcommon.fixpoint``: one Spark job per round).
+The struct order (dist, seed) is a total order, so the fixpoint is unique
 and engine-portable (same portability argument as the matching /
 Borůvka struct keys).
 
@@ -21,12 +23,10 @@ rows to shuffle).
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .gcommon import _ckpt
+from .gcommon import _ckpt, fixpoint, norm_edges
 
 
 def nearest_seed_partition(
@@ -40,23 +40,9 @@ def nearest_seed_partition(
     spark = edges.sparkSession
     P = int(partitions or spark.conf.get("spark.sql.shuffle.partitions"))
 
-    und = _ckpt(
-        edges.select("src", "dst")
-        .union(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .filter(F.col("src") != F.col("dst"))
-        .dropDuplicates(["src", "dst"]),
-        P, "src",
-    )
-    state = _ckpt(
-        seeds.select("id").distinct().select(
-            "id", F.struct(F.lit(0).cast("long").alias("d"),
-                           F.col("id").alias("l")).alias("m")),
-        P, "id",
-    )
-    metrics: list[dict] = []
+    und = norm_edges(edges, P, materialize="checkpoint")
 
-    for rnd in range(max_rounds):
-        t0 = time.time()
+    def relax(state: DataFrame) -> DataFrame:
         cand = (
             und.join(state.withColumnRenamed("id", "src").hint("shuffle_hash"),
                      "src")
@@ -64,24 +50,20 @@ def nearest_seed_partition(
             .agg(F.min(F.struct((F.col("m.d") + 1).alias("d"),
                                 F.col("m.l").alias("l"))).alias("c"))
         )
-        merged = (
+        return (
             state.join(cand.hint("shuffle_hash"), "id", "full_outer")
-            .select("id", F.least("m", "c").alias("m"))
+            .select("id", F.least("m", "c").alias("m"),
+                    (F.col("m").isNull() | (F.col("c") < F.col("m"))).alias("_chg"))
         )
-        new_state = _ckpt(merged, P, "id")
-        changed = (
-            new_state.alias("n")
-            .join(state.alias("o").hint("shuffle_hash"), "id", "left")
-            .filter(F.col("o.m").isNull() | (F.col("n.m") != F.col("o.m")))
-            .count()
-        )
-        state = new_state
-        metrics.append({"round": rnd, "changed": changed,
-                        "size": state.count(),
-                        "seconds": time.time() - t0})
-        if changed == 0:
-            break
 
+    state, metrics = fixpoint(
+        seeds.select("id").distinct().select(
+            "id", F.struct(F.lit(0).cast("long").alias("d"),
+                           F.col("id").alias("l")).alias("m")),
+        relax, P, ("id",), max_rounds,
+        stop=lambda m, _: m["changed"] == 0,
+        counters={"changed": "_chg"},
+    )
     out = state.select("id", F.col("m.d").alias("dist"),
                        F.col("m.l").alias("seed"))
     return _ckpt(out, P, "id"), metrics

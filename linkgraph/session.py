@@ -15,7 +15,8 @@ from pyspark.sql import SparkSession
 
 
 def default_cores() -> int:
-    return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    """``SPARK_GRAFT_CPUS``, else the CPUs this process may run on."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
 
 
 def default_driver_memory() -> str:

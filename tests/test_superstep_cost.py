@@ -11,10 +11,28 @@ from pyspark.sql.classic.dataframe import DataFrame
 
 from linkgraph import datagen, oracles
 from linkgraph.algos import connected_components, label_propagation, pagerank
+from linkgraph.algos.kcore import core_numbers, kcore_vertices
+from linkgraph.algos.ktruss import truss_numbers
+from linkgraph.algos.paths import sssp_distances
+from linkgraph.algos.scc import condensation_levels
+from linkgraph.algos.voronoi import nearest_seed_partition
 
 V = 30
 EDGES = datagen.expected_edges(V)
 ROUNDS = 12
+# a weighted 41-vertex path: every loop but the truss one moves one hop
+# per round on it, so none reaches its fixpoint within ROUNDS + 1 rounds
+PATH = [(i, i + 1, 1) for i in range(40)]
+
+
+def _tube(rings: int = 16, m: int = 4) -> list[tuple[int, int]]:
+    """Triangulated tube of ``rings`` + 1 rings of ``m`` vertices: inner
+    edges lie on two triangles, the end rings' edges on one, so the truss
+    h-index drop moves in from the ends one ring per round."""
+    v = lambda r, j: r * m + j % m  # noqa: E731
+    return [(v(r, j), v(r, j + 1)) for r in range(rings + 1) for j in range(m)] + [
+        (v(r, j), v(r + 1, j + d)) for r in range(rings) for j in range(m) for d in (0, 1)
+    ]
 
 
 @pytest.fixture(scope="module")
@@ -64,7 +82,25 @@ RUNS = {
     "pagerank_dst_buckets": (pagerank, dict(tol=0.0, max_iter=ROUNDS, dst_buckets=4)),
     "connected_components": (connected_components, dict(max_iter=ROUNDS)),
     "label_propagation": (label_propagation, dict(max_iter=ROUNDS)),
+    "core_numbers": (core_numbers, dict(max_rounds=ROUNDS)),
+    "kcore_vertices": (kcore_vertices, dict(k=2, max_rounds=ROUNDS)),
+    "nearest_seed_partition": (nearest_seed_partition, dict(seeds=[0], max_rounds=ROUNDS)),
+    "truss_numbers": (truss_numbers, dict(max_rounds=ROUNDS)),
+    "condensation_levels": (condensation_levels, dict(max_rounds=ROUNDS)),
+    "sssp_distances": (sssp_distances, dict(sources=[0], max_iter=ROUNDS)),
 }
+
+
+def _inputs(spark, algo, kw):
+    """Edges and keyword arguments of a non-PageRank run; a list of ids
+    becomes a one-column ``id`` DataFrame."""
+    if algo is truss_numbers:
+        edges = spark.createDataFrame(_tube(), "src long, dst long")
+    else:
+        edges = spark.createDataFrame(PATH, "src long, dst long, weight long")
+    kw = {k: spark.createDataFrame([(i,) for i in v], "id long") if isinstance(v, list)
+          else v for k, v in kw.items()}
+    return edges, kw
 
 
 @pytest.mark.parametrize("run", list(RUNS))
@@ -73,13 +109,42 @@ def test_checkpoint_plan_stats_grow_linearly(spark, edges30, vertices30, plan_bi
     if algo is pagerank:
         edges, kw = edges30, dict(kw, vertices=vertices30)
     else:
-        # a 41-vertex path: neither loop reaches its fixpoint within ROUNDS
-        edges = spark.createDataFrame([(i, i + 1) for i in range(40)], "src long, dst long")
+        edges, kw = _inputs(spark, algo, kw)
     if run == "pagerank_warm":
         kw["initial_ranks"] = spark.createDataFrame(
             [(i, float(i + 1)) for i in range(V)], "id long, rank double")
-    _, metrics = algo(edges, partitions=8, **kw)
-    assert len(metrics) == ROUNDS
+    out = algo(edges, partitions=8, **kw)
+    if isinstance(out, tuple):
+        assert len(out[1]) == ROUNDS
     assert len(plan_bits) > ROUNDS
-    steps = np.diff(plan_bits)
+    # the loop's checkpoints are the last ones (condensation_levels runs
+    # SCC's own checkpoints first)
+    steps = np.diff(plan_bits[-ROUNDS:])
     assert steps[-1] <= 2 * steps[0], plan_bits
+
+
+@pytest.mark.parametrize("run", [r for r, (algo, _) in RUNS.items() if algo is not pagerank])
+def test_fixpoint_one_job_per_round(spark, run):
+    """Every fixpoint loop runs ONE Spark job per round: with AQE off (one
+    action = one job), a run of k + 1 rounds costs exactly one job more
+    than a run of k rounds.  Metric records share one schema."""
+    algo, kw = RUNS[run]
+    edges, kw = _inputs(spark, algo, kw)
+    cap = "max_iter" if "max_iter" in kw else "max_rounds"
+    sc = spark.sparkContext
+    old = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    jobs, outs = [], []
+    try:
+        for k in (1, 2):
+            sc.setJobGroup(f"fixpoint_{run}_{k}", run)
+            outs.append(algo(edges, partitions=8, **dict(kw, **{cap: k})))
+            jobs.append(len(sc.statusTracker().getJobIdsForGroup(f"fixpoint_{run}_{k}")))
+    finally:
+        sc.setJobGroup("default", "")
+        spark.conf.set("spark.sql.adaptive.enabled", old)
+    assert jobs[1] == jobs[0] + 1, jobs
+    if isinstance(outs[1], tuple):
+        ms = outs[1][1]
+        assert [m["iteration"] for m in ms] == list(range(len(ms))) == [0, 1]
+        assert all("seconds" in m and "rows" in m for m in ms), ms

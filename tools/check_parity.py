@@ -40,7 +40,7 @@ def main():
     from linkgraph import suite
     from linkgraph.session import get_spark
 
-    spark = get_spark("parity", cores=8, shuffle_partitions=16, driver_memory="8g")
+    spark = get_spark("parity", shuffle_partitions=16)
     con = duckdb.connect()
     for t in TABLES:
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")

@@ -146,7 +146,7 @@ def prep(mult: int) -> None:
     """Stage the derived table on all cores (not a measured config)."""
     from linkgraph.session import get_spark
 
-    spark = get_spark("scaling-prep", cores=32, shuffle_partitions=64)
+    spark = get_spark("scaling-prep", shuffle_partitions=64)
     derived_edges(spark, SF_DIR, mult, 64)
     spark.stop()
 

@@ -51,12 +51,12 @@ def id_oriented_triangles(edges):
 def main():
     hub_deg = int(os.environ.get("WEDGE_HUB_DEG", "50000"))
     bg_edges = int(os.environ.get("WEDGE_BG_EDGES", "2000000"))
-    cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
     from linkgraph import datagen
-    from linkgraph.session import get_spark
+    from linkgraph.session import default_cores, get_spark
     from linkgraph.algos.triangles import degree_ranked_oriented, _rank_lt
 
+    cores = default_cores()
     spark = get_spark("wedge-ab", cores=cores, shuffle_partitions=2 * cores)
 
     bg = datagen.rmat_edges(spark, bg_edges, 18, partitions=2 * cores)
